@@ -61,13 +61,16 @@ def polys_fit_broadcast(polys: DataFrame, max_bytes: int | None = None) -> bool:
     bench regression (BENCH/BASELINE.md r4) — the probe must not run a
     job.
 
-    Unknown statistics (sizeInBytes == Long.MaxValue, i.e. a
-    LogicalRDD from ``createDataFrame``) mean the dimension was built
-    from DRIVER-resident data — it already fit on the driver, so the
-    broadcast path is safe by construction and we return True.  Every
-    file-backed source (parquet/json/binaryFile) reports real sizes
-    and auto-switches; pass ``distributed=True`` explicitly for exotic
-    RDD-derived dimensions of unknown size."""
+    Dimensions built with ``session.local_df`` are LocalRelations and
+    report their real size, like every file-backed source
+    (parquet/json/binaryFile), so they auto-switch on bytes.  Unknown
+    statistics (sizeInBytes == Long.MaxValue) remain for genuine RDD
+    dimensions — a LogicalRDD from ``createDataFrame(list)`` such as
+    the vector source readers build — whose rows came from DRIVER-
+    resident data: they already fit on the driver, so the broadcast
+    path is safe by construction and we return True.  Pass
+    ``distributed=True`` explicitly for exotic RDD-derived dimensions
+    of unknown size."""
     max_bytes = BROADCAST_MAX_BYTES if max_bytes is None else max_bytes
     size = int(polys._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     if size >= (1 << 62):  # statistics unknown: driver-created data

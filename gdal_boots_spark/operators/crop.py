@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from ..geom.crs import transform_coords
 from ..geom.packed import PackedGeometry, from_geojson, to_geojson
 from ..geom.raster_kernels import apply_mask
+from ..session import local_df
 from ..sources.tiles import RasterGrid
 from .rasterize import rasterize
 from .warp import slice_window, window_of_bbox
@@ -63,8 +64,8 @@ def crop_by_geometry(
 
     sliced, out_grid = slice_window(tiles, grid, window)
 
-    poly_df = spark.createDataFrame(
-        [(0, json.dumps(to_geojson(pg), separators=(",", ":")))], "poly_id long, geojson string"
+    poly_df = local_df(
+        spark, [(0, json.dumps(to_geojson(pg), separators=(",", ":")))], "poly_id long, geojson string"
     )
     mask_tiles = rasterize(spark, poly_df, out_grid, all_touched=all_touched, dense=True)
 

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_df
+
 
 def pack_shards(
     docs: DataFrame, budget: int, key_col: str = "doc_id", tokens_col: str | None = None,
@@ -71,9 +73,7 @@ def pack_shards(
     else:
         # thousands of partitions would bloat the plan with a literal
         # map; ship the offsets as a broadcast dimension instead
-        off_df = spark.createDataFrame(
-            sorted(offsets.items()), "_pid int, _off long"
-        )
+        off_df = local_df(spark, sorted(offsets.items()), "_pid int, _off long")
         src = ranged.join(F.broadcast(off_df), "_pid", "left")
         off_col = F.coalesce(F.col("_off"), F.lit(0))
     cum_before = off_col + F.coalesce(F.sum("n_tokens").over(w), F.lit(0))

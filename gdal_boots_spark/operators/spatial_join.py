@@ -27,6 +27,8 @@ geometry x geometry joins).
 
 from __future__ import annotations
 
+import json
+
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,6 +37,7 @@ from ..functions.geometry_fns import cell_id_col
 from ..geom.cells import MAX_RES, cover_bbox, pick_res
 from ..geom.packed import from_geojson
 from ..geom.pip import points_in_polygon
+from ..session import local_df
 from .spans import extract_geo_spans
 
 
@@ -114,13 +117,13 @@ def _cell_id_for(x_col: str, y_col: str, res: int):
 _POLY_DIM_CACHE: dict = {}
 
 # per-session memo of tiny driver-built dimension DataFrames (cell
-# covers): createDataFrame ships every row through py4j and parses the
-# schema per call (~35 round trips + conversion for a few hundred rows)
-# on EVERY cold plan build — the rows are a pure function of the
-# (bboxes, res) key, so the same immutability contract as
-# _POLY_DIM_CACHE applies.  Values are DataFrames (plans, not results:
-# a LogicalRDD over driver-resident rows; every job still recomputes
-# downstream from it).
+# covers): building one ships every row to the JVM and parses the
+# schema per call on EVERY cold plan build — the rows are a pure
+# function of the (bboxes, res) key, so the same immutability contract
+# as _POLY_DIM_CACHE applies.  Values are DataFrames (plans, not
+# results): a LocalRelation (session.local_df) whose rows live in the
+# plan, so broadcasting it is a driver-side LocalTableScan and no job
+# runs Python workers to rebuild it.
 _LOCAL_DF_CACHE: dict = {}
 
 
@@ -130,7 +133,7 @@ def _memo_local_df(spark: SparkSession, key: tuple, rows_fn, schema: str) -> Dat
     if df is None:
         if len(_LOCAL_DF_CACHE) > 64:
             _LOCAL_DF_CACHE.pop(next(iter(_LOCAL_DF_CACHE)))
-        df = spark.createDataFrame(rows_fn(), schema)
+        df = local_df(spark, rows_fn(), schema)
         _LOCAL_DF_CACHE[full_key] = df
     return df
 
@@ -848,11 +851,12 @@ def pip_join_docs_any(
     accept any geometry, gdal.py:836-846).
 
     Point spans take the codegen fast path (== pip_join_docs);
-    Polygon/LineString/Multi* spans go through geojson_decode_udf ->
-    native bbox cover explode -> broadcast cell join, deduped WITHOUT a
-    shuffle via the reporting-cell trick (a candidate survives only in
-    the cell containing the bbox-intersection lower-left corner), then
-    exact GEOS-Intersects refinement against the broadcast packed dims.
+    Polygon/LineString/Multi* spans go through the _decode_bounds
+    mapInArrow -> native bbox cover explode -> broadcast cell join,
+    deduped WITHOUT a shuffle via the reporting-cell trick (a candidate
+    survives only in the cell containing the bbox-intersection
+    lower-left corner), then exact GEOS-Intersects refinement against
+    the broadcast packed dims.
 
     ``refine_mode``: "split" (default) materializes the candidates
     once (persist) and accepts rect-span x rect-polygon pairs directly
@@ -869,8 +873,7 @@ def pip_join_docs_any(
     where()-split would recompute the candidate subtree twice — the
     persist is the documented price of branching, cf. CLAUDE gotchas.)
     """
-    from ..functions.geometry_fns import cell_id_col, geojson_decode_udf, geom_bounds_udf, point_xy_native
-    from ..functions.geometry_fns import point_xy_sql
+    from ..functions.geometry_fns import point_xy_native, point_xy_sql
 
     spark = docs.sparkSession
     packed, bboxes = _collect_polys(polys)

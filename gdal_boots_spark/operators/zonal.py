@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..geom.raster_kernels import rasterize_mask
+from ..session import local_df
 from ..sources.tiles import RasterGrid
 from .cover import contribs_broadcast, contribs_distributed, geom_arrays, polys_fit_broadcast
 
@@ -77,8 +78,8 @@ def zonal_stats(
     else:
         packed, pairs = contribs_broadcast(spark, polys, grid)
         if not pairs:
-            return spark.createDataFrame([], _OUT_SCHEMA)
-        cdf = spark.createDataFrame(pairs, "tile_x int, tile_y int, poly_id long")
+            return local_df(spark, [], _OUT_SCHEMA)
+        cdf = local_df(spark, pairs, "tile_x int, tile_y int, poly_id long")
         joined = tiles.join(F.broadcast(cdf), ["tile_x", "tile_y"])
         bpolys = spark.sparkContext.broadcast(packed)
 

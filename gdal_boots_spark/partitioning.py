@@ -10,9 +10,9 @@ replication path that already handled it).
 
 ``spread_small_scan`` is gated by a ZERO-JOB stats probe (the
 polys_fit_broadcast pattern: file sources report real bytes, derived
-plans inherit estimates, LogicalRDD/driver-resident plans report
-UNKNOWN and are left alone) and targets ~64 KiB of source bytes per
-task, capped at defaultParallelism:
+plans inherit estimates, LogicalRDD plans from createDataFrame(list)
+report UNKNOWN and are left alone) and targets ~64 KiB of source bytes
+per task, capped at defaultParallelism:
 
 * big cluster inputs already plan many partitions -> no-op (the gate
   compares against the planned partition count, so a well-partitioned

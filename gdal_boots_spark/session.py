@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 ENGINE_CONF = {
     "spark.sql.adaptive.enabled": "true",
@@ -44,3 +44,30 @@ def get_spark(app_name: str = "gdal_boots_spark", master: str | None = None,
     b = b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     b = b.config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     return b.getOrCreate()
+
+
+def local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """Driver-resident rows (tuples in ``schema`` column order) + a DDL
+    schema -> a DataFrame planned as a ``LocalRelation``.
+
+    For driver-built DIMENSION tables (cell covers, contribution pairs,
+    offsets).  ``createDataFrame(list)`` plans a LogicalRDD over
+    ``parallelize``: every job that broadcasts it re-runs the rows
+    through Python workers, and its statistics are unknown.  A pyarrow
+    Table instead ships once, as Arrow batches, into a LocalRelation:
+    broadcasting it is a driver-side LocalTableScan and the optimizer
+    sees its real size.  The Table is built directly — not via pandas,
+    whose Arrow conversion silently falls back to the list path when a
+    column fails to convert — so a value that does not fit its column
+    type raises here instead."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = _parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, arrow_schema)], schema=arrow_schema
+    )
+    return spark.createDataFrame(table, struct)

@@ -28,6 +28,8 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_df
+
 GEO_MOD = (0, 1, 2)
 MEDIA_MOD = (8, 9)
 
@@ -77,8 +79,8 @@ def read_parquet_memo(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
-# per-session memo of the constant dim table: createDataFrame ships the
-# rows through py4j on every call, and cold-plan bench reps rebuild the
+# per-session memo of the constant dim table: building it ships the
+# rows to the JVM on every call, and cold-plan bench reps rebuild the
 # flagship (and its dim) per rep.  The rows derive from the RECTS
 # constant only, so the cached DataFrame is identical by construction.
 _RECT_DF_CACHE: dict = {}
@@ -90,7 +92,7 @@ def rect_polygons_df(spark: SparkSession) -> DataFrame:
     df = _RECT_DF_CACHE.get(key)
     if df is None:
         rows = [(pid, minx, miny, maxx, maxy, rect_ring_geojson(minx, miny, maxx, maxy)) for pid, minx, miny, maxx, maxy in RECTS]
-        df = spark.createDataFrame(rows, "poly_id long, minx double, miny double, maxx double, maxy double, geojson string")
+        df = local_df(spark, rows, "poly_id long, minx double, miny double, maxx double, maxy double, geojson string")
         if len(_RECT_DF_CACHE) > 4:
             _RECT_DF_CACHE.pop(next(iter(_RECT_DF_CACHE)))
         _RECT_DF_CACHE[key] = df

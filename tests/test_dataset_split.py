@@ -142,6 +142,26 @@ def test_pack_shards_matches_duckdb_oracle(spark):
         pack_shards(docs, budget=0)
 
 
+def test_pack_shards_broadcast_offsets_match_literal_map(spark):
+    """Over 256 non-empty range partitions the prefix offsets ride a
+    broadcast dimension instead of a literal map: same shards."""
+    from gdal_boots_spark.operators.packing import pack_release, pack_shards
+
+    docs = spark.range(3000).selectExpr("id AS doc_id", "id % 7 + 1 AS n")
+
+    def shards(num_partitions):
+        res = pack_shards(docs, budget=50, tokens_col="n", num_partitions=num_partitions)
+        got = sorted(tuple(r) for r in res.collect())
+        plan = res._jdf.queryExecution().executedPlan().toString()
+        pack_release(res)
+        return got, "_off" in plan
+
+    wide, wide_uses_dim = shards(300)
+    narrow, narrow_uses_dim = shards(4)
+    assert wide_uses_dim and not narrow_uses_dim
+    assert wide == narrow and len(wide) == 3000
+
+
 def test_sample_rate_one_keeps_everything(spark):
     """ADVICE r4: rate=1.0 must keep every row — the 'g' sentinel from
     hash_split applies to deterministic_sample/stratified_sample too

@@ -550,8 +550,8 @@ def test_auto_switch_broadcast_distributed(spark, monkeypatch, tmp_path):
     """distributed=None auto-picks: broadcast under the threshold,
     the no-collect shuffle sibling above it, identical results
     (round-4 verdict item 6).  The probe is ZERO-JOB (Catalyst plan
-    statistics): driver-created dims (unknown stats) always fit;
-    file-backed dims compare real bytes against the ceiling."""
+    statistics): LocalRelation and file-backed dims compare real bytes
+    against the ceiling; RDD dims (unknown stats) always fit."""
     from gdal_boots_spark.operators import cover, spatial_join
 
     rng = np.random.default_rng(11)
@@ -564,7 +564,8 @@ def test_auto_switch_broadcast_distributed(spark, monkeypatch, tmp_path):
         ],
         "point_id long, x double, y double",
     )
-    # driver-created dimension: statistics unknown -> fits by construction
+    # driver-built dimension (session.local_df LocalRelation): real, tiny
+    # statistics -> fits
     assert cover.polys_fit_broadcast(rect_polygons_df(spark))
     # file-backed dimension: real plan statistics against the ceiling
     ppath = str(tmp_path / "polys.parquet")
@@ -799,3 +800,96 @@ def test_multiring_fast_decode_parity():
     fast = decode(True)
     slow = decode(False)
     assert fast == slow and len(fast) == 350  # 50 None rows dropped
+
+
+def _geo_docs(spark, docs: dict):
+    """{doc_id: [(kind, text), ...]} -> an interleaved docs table."""
+    return spark.createDataFrame(
+        [
+            (d, [{"kind": k, "text": t, "media_ref": None, "offset": i} for i, (k, t) in enumerate(spans)])
+            for d, spans in docs.items()
+        ],
+        "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
+    )
+
+
+def test_docs_any_skips_malformed_span(spark):
+    """A truncated GeoJSON span must not fail the job (its decode error
+    once raised NameError): it yields no pair, and every valid pair —
+    including those of the spans sharing its row and Arrow batch — is
+    exactly what the same table gives with that span made non-geo."""
+    import json as _json
+
+    from gdal_boots_spark.operators.spatial_join import pip_join_docs_any
+    from gdal_boots_spark.session import local_df
+
+    def gj(t, c):
+        return _json.dumps({"type": t, "coordinates": c}, separators=(",", ":"))
+
+    polys = local_df(
+        spark,
+        [
+            (700, gj("Polygon", [[[26.0, 53.0], [26.5, 53.0], [26.5, 53.5], [26.0, 53.5], [26.0, 53.0]]])),
+            (701, gj("Polygon", [[[27.0, 53.0], [28.0, 53.0], [27.5, 54.0], [27.0, 53.0]]])),
+        ],
+        "poly_id long, geojson string",
+    )
+    bad = '{"type":"LineString","coordinates":[[0,0],[1'
+    spans = {
+        "d1": [("geo", gj("Point", [26.25, 53.25])), ("geo", gj("Point", [27.5, 53.2]))],
+        "d2": [
+            ("geo", gj("Polygon", [[[26.4, 53.4], [26.6, 53.4], [26.6, 53.6], [26.4, 53.6], [26.4, 53.4]]])),
+            ("geo", bad),
+            ("geo", gj("LineString", [[26.9, 53.5], [28.1, 53.5]])),
+        ],
+        "d3": [("geo", gj("Polygon", [[[29.0, 55.0], [29.1, 55.0], [29.05, 55.1], [29.0, 55.0]]]))],
+    }
+    clean = {d: [("text", t) if t == bad else (k, t) for k, t in s] for d, s in spans.items()}
+
+    def pairs(docs):
+        return {
+            (r["doc_id"], r["span_pos"], r["poly_id"])
+            for r in pip_join_docs_any(_geo_docs(spark, docs), polys).collect()
+        }
+
+    got = pairs(spans)
+    assert got == pairs(clean)
+    assert got == {("d1", 0, 700), ("d1", 1, 701), ("d2", 0, 700), ("d2", 2, 701)}, got
+
+
+def _assert_local_covers(df) -> int:
+    """The join's physical plan holds no Python-built RDD scan and every
+    BroadcastExchange (the driver-built cell covers) sits directly over
+    a LocalTableScan.  Returns the number of broadcasts checked."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Scan ExistingRDD" not in plan, plan
+    lines = plan.splitlines()
+    bx = [i for i, line in enumerate(lines) if "BroadcastExchange" in line]
+    for i in bx:
+        assert "LocalTableScan" in lines[i + 1], "\n".join(lines[i : i + 3])
+    return len(bx)
+
+
+def test_cover_broadcasts_are_local_table_scans(spark):
+    """Cell covers are LocalRelations: broadcasting one is a driver-side
+    LocalTableScan, so no job runs Python workers to rebuild it.  The
+    polygon dims here are deliberately RDD-backed (createDataFrame of a
+    list): they are collected at build time and never enter the plan."""
+    import json as _json
+
+    from gdal_boots_spark.operators.spatial_join import pip_join_docs_any
+
+    dim_schema = "poly_id long, geojson string"
+    rects = spark.createDataFrame(rect_polygons_df(spark).select("poly_id", "geojson").collect(), dim_schema)
+    tri = _json.dumps({"type": "Polygon", "coordinates": [[[26.5, 53.5], [28.5, 53.6], [27.2, 54.8], [26.5, 53.5]]]})
+    mixed = rects.unionByName(spark.createDataFrame([(900, tri)], dim_schema))
+    pts = spark.range(200).selectExpr("id AS point_id", "26.0D + id * 0.015D AS x", "53.0D + id * 0.01D AS y")
+
+    assert _assert_local_covers(pip_join_points(pts, rects)) == 1
+    assert _assert_local_covers(pip_join_points(pts, mixed)) == 1
+    docs = interleaved_docs(spark, SF_SMOKE, poly_spans=True)
+    any_join = pip_join_docs_any(docs, mixed)
+    # the Point cover, plus the poly-span cover once in each branch of
+    # the split refine's persisted candidates
+    assert _assert_local_covers(any_join) == 3
+    assert any_join.count() > 0
