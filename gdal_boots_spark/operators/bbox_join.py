@@ -19,6 +19,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import memo, plan_key
+
 
 def _cell_x_sql(v: str, res: int) -> str:
     n = 1 << res
@@ -47,29 +49,6 @@ def _explode_cover(df: DataFrame, res: int, prefix: str) -> DataFrame:
     ).drop("_ix", "_iy", "_iy0", "_iy1")
 
 
-# per-session memo of the auto_res/auto_levels sampling probes, keyed
-# by the SEMANTIC hash of both input plans (the knn _STATS_CACHE /
-# spatial_join _POLY_DIM_CACHE pattern): each probe is 2 bounded
-# limit(sample) jobs whose ~0.3-0.6s of scheduling latency re-ran on
-# EVERY join build (bench best-of-N reps rebuild the plan per rep).
-# Standard table-statistics caching assumption: inputs are immutable
-# within a session; clear with _RES_CACHE.clear() after rewriting an
-# input path in-session.
-_RES_CACHE: dict = {}
-
-
-def _res_memo_key(left: DataFrame, right: DataFrame, tag: str, sample: int):
-    try:
-        return (
-            left.sparkSession.sparkContext.applicationId,
-            left._jdf.queryExecution().analyzed().semanticHash(),
-            right._jdf.queryExecution().analyzed().semanticHash(),
-            tag, sample,
-        )
-    except Exception:  # internal API moved: fall back to no memo
-        return None
-
-
 def auto_res(left: DataFrame, right: DataFrame, sample: int = 1024) -> int:
     """Pick the bucketing resolution from the DATA: x-cell edge closest
     (in log2) to the median rect edge max(w, 2h) — i.e. cell ~ rect.
@@ -83,12 +62,14 @@ def auto_res(left: DataFrame, right: DataFrame, sample: int = 1024) -> int:
     rows / 1575 cells, measured -40% wall vs res=10 (clean-window
     interleaved probe, scripts/bbox_res_probe.py, BENCH/BASELINE.md).
     Two bounded `limit(sample)` scans; their cost (~2 tiny jobs) is
-    paid once per (session, input pair) — memoized in _RES_CACHE."""
-    import statistics
+    paid once per (session, input pair) through session.memo instead of
+    on every join build."""
+    key = ("bbox_res", plan_key(left), plan_key(right), sample)
+    return memo(left.sparkSession, key, lambda: _probe_res(left, right, sample))
 
-    key = _res_memo_key(left, right, "res", sample)
-    if key is not None and key in _RES_CACHE:
-        return _RES_CACHE[key]
+
+def _probe_res(left: DataFrame, right: DataFrame, sample: int) -> int:
+    import statistics
 
     med = []
     for df, p in ((left, "l"), (right, "r")):
@@ -102,12 +83,7 @@ def auto_res(left: DataFrame, right: DataFrame, sample: int = 1024) -> int:
         return 10
     target = max(statistics.median(med), 1e-9)
     res = int(round(math.log2(360.0 / target)))
-    res = max(4, min(res, 18))
-    if key is not None:
-        if len(_RES_CACHE) > 64:
-            _RES_CACHE.pop(next(iter(_RES_CACHE)))
-        _RES_CACHE[key] = res
-    return res
+    return max(4, min(res, 18))
 
 
 def bbox_overlap_join(left: DataFrame, right: DataFrame, res: int | None = 10) -> DataFrame:
@@ -198,9 +174,11 @@ def auto_levels(left: DataFrame, right: DataFrame, sample: int = 1024) -> tuple[
     non-uniform limit(sample) scan missed (or rects beyond the hi-8
     cap) can still exceed that bound.  Memoized per (session, input
     pair) like auto_res."""
-    key = _res_memo_key(left, right, "levels", sample)
-    if key is not None and key in _RES_CACHE:
-        return _RES_CACHE[key]
+    key = ("bbox_levels", plan_key(left), plan_key(right), sample)
+    return memo(left.sparkSession, key, lambda: _probe_levels(left, right, sample))
+
+
+def _probe_levels(left: DataFrame, right: DataFrame, sample: int) -> tuple[int, int]:
     edges = []
     for df, p in ((left, "l"), (right, "r")):
         rows = df.select(
@@ -216,12 +194,7 @@ def auto_levels(left: DataFrame, right: DataFrame, sample: int = 1024) -> tuple[
     hi = max(4, min(int(round(math.log2(360.0 / p10))), 18))
     # floor, not round: guarantees cell edge >= the sampled max edge
     lo = max(4, min(int(math.floor(math.log2(360.0 / emax))), hi))
-    out = (max(lo, hi - 8), hi)
-    if key is not None:
-        if len(_RES_CACHE) > 64:
-            _RES_CACHE.pop(next(iter(_RES_CACHE)))
-        _RES_CACHE[key] = out
-    return out
+    return max(lo, hi - 8), hi
 
 
 def bbox_overlap_join_adaptive(

@@ -10,11 +10,11 @@ TWO physical shapes, auto-picked from the raster's PLAN-TIME size
 (r8, guide §2.4/§3.1 — the raster is the DIMENSION of this join):
 
 * broadcast path (raster <= cover.BROADCAST_MAX_BYTES dense): the tile
-  table is collected ONCE (memoized per session like the polygon dims)
-  into a dense (bands, H, W) array + a present-tile mask, broadcast,
-  and sampling is a single ArrowEvalPython over the point side's
-  codegen pixel math — ZERO shuffles, no cogroup, the point side never
-  leaves its scan stage.  Absent tiles still yield NULL via the mask
+  table is collected ONCE into a dense (bands, H, W) array + a
+  present-tile mask and broadcast (session-memoized), and sampling is
+  a single ArrowEvalPython over the point side's codegen pixel math —
+  ZERO shuffles, no cogroup, the point side never leaves its scan
+  stage.  Absent tiles still yield NULL via the mask
   (sparse tile tables keep left-outer semantics).
 
 * cogroup path (large rasters; ``distributed=True``): ONE shuffle of
@@ -43,28 +43,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..geom.affine import invert_transform
+from ..session import memo, plan_key
 from ..sources.tiles import RasterGrid
-
-# (applicationId, tiles semanticHash, grid geometry) -> (dense array,
-# present mask).  Same pattern/caveat as spatial_join._POLY_DIM_CACHE:
-# inputs immutable within a session; clear after rewriting a path.
-_RASTER_DIM_CACHE: dict = {}
 
 
 def _collect_raster(tiles: DataFrame, grid: RasterGrid):
     """Collect the tile table into (dense float64 (bands, H, W) array,
-    present bool (bands, n_ty, n_tx) mask), memoized per session."""
-    try:
-        key = (
-            tiles.sparkSession.sparkContext.applicationId,
-            tiles._jdf.queryExecution().analyzed().semanticHash(),
-            grid.raster_id, grid.transform, grid.width, grid.height,
-            grid.tile_w, grid.tile_h, grid.bands,
-        )
-    except Exception:  # internal API moved: fall back to no memo
-        key = None
-    if key is not None and key in _RASTER_DIM_CACHE:
-        return _RASTER_DIM_CACHE[key]
+    present bool (bands, n_ty, n_tx) mask)."""
     arr = np.full((grid.bands, grid.height, grid.width), np.nan, dtype=np.float64)
     present = np.zeros((grid.bands, grid.n_tiles_y, grid.n_tiles_x), dtype=bool)
     rows = tiles.select("band", "tile_x", "tile_y", "width", "height", "dtype", "data").collect()
@@ -76,35 +61,26 @@ def _collect_raster(tiles: DataFrame, grid: RasterGrid):
         y0, x0 = ty * grid.tile_h, tx * grid.tile_w
         arr[b, y0 : y0 + r["height"], x0 : x0 + r["width"]] = blk.astype(np.float64)
         present[b, ty, tx] = True
-    out = (arr, present)
-    if key is not None:
-        if len(_RASTER_DIM_CACHE) > 16:
-            _RASTER_DIM_CACHE.pop(next(iter(_RASTER_DIM_CACHE)))
-        _RASTER_DIM_CACHE[key] = out
-    return out
-
-
-# the dense raster's Broadcast handle, memoized alongside the collect:
-# sc.broadcast() re-pickles and re-ships the whole dense array on every
-# plan build otherwise (bench best-of-N rebuilds the plan per rep).
-_RASTER_BC_CACHE: dict = {}
+    return arr, present
 
 
 def _broadcast_raster(tiles: DataFrame, grid: RasterGrid):
-    out = _collect_raster(tiles, grid)
-    sc = tiles.sparkSession.sparkContext
-    # key on id(out) ONLY while the dim cache pins the tuple alive (an
-    # unmemoized collect could see its id recycled after GC)
-    if not any(v is out for v in _RASTER_DIM_CACHE.values()):
-        return sc.broadcast(out)
-    key = (sc.applicationId, id(out))
-    bc = _RASTER_BC_CACHE.get(key)
-    if bc is None:
-        if len(_RASTER_BC_CACHE) > 16:
-            _RASTER_BC_CACHE.pop(next(iter(_RASTER_BC_CACHE)))
-        bc = sc.broadcast(out)
-        _RASTER_BC_CACHE[key] = bc
-    return bc
+    """The dense raster as a Broadcast, session-memoized on the tile
+    table's files + the grid: rebuilding the plan neither re-collects
+    nor re-ships the array.  The driver-side Broadcast holds only a
+    file path, so the memo does not pin the dense array in driver
+    memory; an evicted entry is unpersisted from the executors."""
+    key = (
+        "raster_bc", plan_key(tiles),
+        grid.raster_id, grid.transform, grid.width, grid.height,
+        grid.tile_w, grid.tile_h, grid.bands,
+    )
+    spark = tiles.sparkSession
+    return memo(
+        spark, key,
+        lambda: spark.sparkContext.broadcast(_collect_raster(tiles, grid)),
+        on_evict=lambda bc: bc.unpersist(),
+    )
 
 
 def values_by_points(

@@ -11,6 +11,7 @@ on AQE coalescing from a higher initial value.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -71,3 +72,65 @@ def local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
         [pa.array(c, f.type) for c, f in zip(cols, arrow_schema)], schema=arrow_schema
     )
     return spark.createDataFrame(table, struct)
+
+
+# entries one SparkContext's memo keeps; the oldest is evicted first
+MEMO_ENTRIES = 64
+_MEMO_LOCK = threading.Lock()
+
+
+def memo(spark: SparkSession, key: tuple, build, on_evict=None):
+    """``build()`` once per ``key`` and SparkContext; later calls with
+    the same key return the stored value.  For plan-build work that
+    costs a Spark job or ships data to the JVM: dimension collects,
+    sampling probes, driver-built dims, base relations, broadcasts.
+
+    The contract, stated once for every caller:
+
+    * Entries are READ-ONLY.  Every hit returns the stored object
+      itself; mutating it corrupts every later hit.
+    * Entries are keyed by their INPUT FILES.  A key derived from a
+      DataFrame includes ``plan_key(df)``, a key derived from a path
+      includes the path's mtime, and any other key holds the values
+      the entry is a pure function of.  A rewritten table therefore
+      gets a new key and is never served stale; nothing is ever
+      cleared by hand.  Each caller starts its key with its own tag.
+
+    The store is an attribute of the SparkContext object, so a new
+    context starts empty and a stopped one's entries are freed with
+    it (entries reference their context, which a weak-keyed dict
+    could never release).  At most MEMO_ENTRIES entries are kept;
+    evicting one calls its ``on_evict(value)``, e.g. to unpersist a
+    Broadcast."""
+    sc = spark.sparkContext
+    with _MEMO_LOCK:
+        store = sc.__dict__.setdefault("_gdal_boots_memo", {})
+        hit = store.get(key)
+    if hit is not None:
+        return hit[0]
+    # built outside the lock: a build runs Spark jobs.  Two threads
+    # racing on one key both build; the first store wins and the
+    # loser's value is evicted at once.
+    value = build()
+    evicted = []
+    with _MEMO_LOCK:
+        hit = store.get(key)
+        if hit is None:
+            while len(store) >= MEMO_ENTRIES:
+                evicted.append(store.pop(next(iter(store))))
+            store[key] = (value, on_evict)
+        else:
+            evicted.append((value, on_evict))
+    for old_value, old_evict in evicted:
+        if old_evict is not None:
+            old_evict(old_value)
+    return value if hit is None else hit[0]
+
+
+def plan_key(df: DataFrame) -> tuple:
+    """Memo key of a DataFrame's inputs: the semantic hash of its plan
+    plus the files it reads.  The hash alone is equal for two reads of
+    one path, but Spark names every written part file uniquely, so a
+    rewritten table gets a new key.  A LocalRelation (``local_df``)
+    reads no files; its hash covers its rows."""
+    return (df.semanticHash(), tuple(sorted(df.inputFiles())))

@@ -113,3 +113,42 @@ def test_values_by_points_broadcast_vs_cogroup(spark):
     # broadcast path emits no SHUFFLE exchange (broadcast is fine)
     plan = values_by_points(pts, tiles, grid, distributed=False)._jdf.queryExecution().executedPlan().toString()
     assert "hashpartitioning" not in plan and "CoGroup" not in plan
+
+
+def test_values_by_points_memo_keeps_each_raster(spark, monkeypatch):
+    """With room for ONE memo entry, sampling two rasters of the same
+    grid in turn returns each raster's own values: every switch misses,
+    broadcasts that raster's array, and unpersists the evicted
+    raster's Broadcast.  Repeating a raster is a hit (no new
+    broadcast)."""
+    from pyspark import Broadcast
+
+    from gdal_boots_spark import session
+
+    monkeypatch.setattr(session, "MEMO_ENTRIES", 1)
+    grid = _ramp_grid()
+    ramp = np.arange(1, 16, dtype=np.int32).reshape(3, 5)
+    rasters = {"a": array_to_tiles(spark, ramp, grid), "b": array_to_tiles(spark, ramp * 10, grid)}
+    sc = spark.sparkContext
+    made, unpersisted = [], []
+    real_broadcast = sc.broadcast
+
+    def broadcast(value):
+        made.append(real_broadcast(value))
+        return made[-1]
+
+    monkeypatch.setattr(sc, "broadcast", broadcast)
+    monkeypatch.setattr(Broadcast, "unpersist", lambda self, blocking=False: unpersisted.append(self))
+    pts = spark.createDataFrame([(0, 0.2, 2.5), (1, 4.5, 0.5)], "point_id long, x double, y double")
+
+    def sample(name):
+        out = values_by_points(pts, rasters[name], grid, distributed=False).collect()
+        return {r["point_id"]: r["value"] for r in out}
+
+    assert sample("a") == {0: 1.0, 1: 15.0}
+    assert sample("a") == {0: 1.0, 1: 15.0}
+    assert len(made) == 1
+    assert sample("b") == {0: 10.0, 1: 150.0}
+    assert sample("a") == {0: 1.0, 1: 15.0}
+    assert len(made) == 3
+    assert unpersisted[-2:] == [made[0], made[1]]

@@ -476,13 +476,11 @@ def test_point_rect_bypass_equals_raycast(spark, monkeypatch):
     assert "ArrowEvalPython" not in plan and "EvalPython" not in plan
     # force the ray-cast path and compare pair sets
     monkeypatch.setattr(sj, "_is_rect_poly", lambda c, ro: False)
-    sj._POLY_DIM_CACHE.clear()
     slow = {
         (r["point_id"], r["poly_id"])
         for r in pip_join_points(pts, polys).select("point_id", "poly_id").collect()
     }
     monkeypatch.undo()
-    sj._POLY_DIM_CACHE.clear()
     assert fast == slow
     # boundary membership follows the half-open rule on the probe rect
     probe = {(i, p) for i, p in fast if p == pid0}
@@ -636,29 +634,45 @@ def test_pip_join_docs_any_geometry_collection_spans(spark):
     assert got == {("c1", 1), ("c2", 1)}
 
 
-def test_poly_refine_modes_identical(spark):
-    """refine_mode='split' (persist-branch, default), 'where'
-    (boolean-UDF filter) and 'arrow' (mapInArrow row filter) produce
-    identical pairs on mixed Point / rect-Polygon /
-    GeometryCollection spans."""
-    from gdal_boots_spark.operators.spatial_join import pip_join_docs_any
-    from gdal_boots_spark.sources.synth import interleaved_docs, rect_polygons_df
+def test_rewritten_polygon_table_is_not_served_stale(spark, tmp_path):
+    """Rewriting a polygon parquet in-session: pip_join_points and
+    pip_join_docs_any over a fresh read join the NEW polygons, not a
+    dimension memoized from the old files."""
+    import json
 
-    docs = interleaved_docs(spark, SF_ORACLE, poly_spans=True)
-    polys = rect_polygons_df(spark)
-    a = {
-        tuple(r)
-        for r in pip_join_docs_any(docs, polys, refine_mode="arrow").collect()
-    }
-    b = {
-        tuple(r)
-        for r in pip_join_docs_any(docs, polys, refine_mode="where").collect()
-    }
-    c = {
-        tuple(r)
-        for r in pip_join_docs_any(docs, polys, refine_mode="split").collect()
-    }
-    assert a == b == c and len(a) > 0
+    from gdal_boots_spark.operators.spatial_join import pip_join_docs_any
+
+    path = str(tmp_path / "polys")
+
+    def rect(x0, y0, x1, y1):
+        return {"type": "Polygon", "coordinates": [[[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]]}
+
+    def write_poly(pid, lo, hi):
+        spark.createDataFrame(
+            [(pid, json.dumps(rect(lo, lo, hi, hi)))], "poly_id long, geojson string"
+        ).write.mode("overwrite").parquet(path)
+
+    pts = spark.createDataFrame([(1, 0.5, 0.5), (2, 5.5, 5.5)], "point_id long, x double, y double")
+    docs = spark.createDataFrame(
+        [
+            ("p", [{"kind": "geo", "text": json.dumps({"type": "Point", "coordinates": [5.5, 5.5]}), "media_ref": None, "offset": 0}]),
+            ("g", [{"kind": "geo", "text": json.dumps(rect(0.25, 0.25, 0.75, 0.75)), "media_ref": None, "offset": 0}]),
+        ],
+        "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
+    )
+
+    def joins():
+        polys = spark.read.parquet(path)
+        return (
+            {(r["point_id"], r["poly_id"]) for r in pip_join_points(pts, polys).collect()},
+            {(r["doc_id"], r["poly_id"]) for r in pip_join_docs_any(docs, polys).collect()},
+        )
+
+    write_poly(7, 0.0, 1.0)
+    assert joins() == ({(1, 7)}, {("g", 7)})
+    write_poly(8, 5.0, 6.0)
+    assert [r["poly_id"] for r in spark.read.parquet(path).collect()] == [8]
+    assert joins() == ({(2, 8)}, {("p", 8)})
 
 
 def test_adaptive_levels_heterogeneous_spans(spark):
