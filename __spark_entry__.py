@@ -53,10 +53,12 @@ def q_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_pip_join_poly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship join with MIXED-geometry geo spans: Point spans via the
-    codegen PIP fast path, rectangular Polygon spans (d % 10 == 3,
-    synth.SQL_PMINX derivation) via decode -> cover -> GEOS-Intersects
-    refinement (pip_join_docs_any).  The oracle is analytic: half-open
+    """Flagship join with MIXED-geometry geo spans, in ONE Arrow pass
+    per partition (pip_join_docs_any): Point spans cross as codegen-
+    parsed x/y and refine by even-odd PIP, rectangular Polygon spans
+    (d % 10 == 3, synth.SQL_PMINX derivation) decode, look up the
+    broadcast cell cover and refine by GEOS-Intersects, in the same
+    mapInArrow.  The oracle is analytic: half-open
     containment for points, strict interval overlap for rects (corner
     lattices guarantee no touching, so strict == GEOS-closed)."""
     from gdal_boots_spark.operators.spatial_join import pip_join_docs_any

@@ -67,6 +67,12 @@ def double_lit_sql(v: float) -> str:
     return r if ("e" in r or "E" in r) else r + "D"
 
 
+def ident_sql(name: str) -> str:
+    """A column name as a quoted Spark SQL identifier: survives reserved
+    words (``order``), dots and spaces; embedded backticks are doubled."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def cell_id_sql(lon: str, lat: str, res: int) -> str:
     """The cell-id arithmetic as ONE SQL string (server-side parsed).
 

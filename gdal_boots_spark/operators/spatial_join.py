@@ -4,20 +4,30 @@ This re-expresses, as one distributed plan, what the reference does
 in-process in ``crop_by_geometry``/``values_by_points`` (gdal.py:819-931):
 geometry -> covering cells -> candidate pairs -> exact refinement.
 
-Physical shape (small/medium polygon side — the common case):
+Physical shape of ``pip_join_points`` (small/medium polygon side — the
+common case):
 
     points ──(native cell_id math, codegen)──┐
                                              ├─ BROADCAST hash join on cell_id
     polys ──(driver: bbox cover explode)─────┘
                       │
-                      └─ mapInPandas ray-cast refinement (Arrow batches,
-                         polygon coords via a Spark broadcast variable —
-                         candidate rows never carry coordinate payloads)
+                      └─ boolean pandas-UDF ray-cast refine (polygon coords
+                         via a memoized Spark broadcast variable), or a
+                         codegen half-open box filter when every polygon is
+                         a rectangle
 
-Zero shuffles end-to-end: the fact (document/point) side flows
-filter -> project -> broadcast-join -> mapInPandas entirely within one
-stage, so the plan scales linearly with executors at 100 TB (the
-two-parallelism scaling evidence in BENCH runs this operator).
+Physical shape of ``pip_join_docs_any`` (geo spans of any type):
+
+    docs scan -> posexplode/filter -> Point x/y (codegen) -> ONE mapInArrow
+
+The mapInArrow decodes each span, looks its cells up in a broadcast
+multi-level cell cover (numpy ``searchsorted``), keeps each closed-bbox
+overlap pair in exactly one reporting cell and refines it exactly — one
+document scan and one Python node per task, no exchange, no broadcast
+join, no persist.
+
+Zero shuffles end-to-end in both: the fact (document/point) side flows
+through one stage, so the plan scales linearly with executors.
 
 For point-vs-polygon the (point, poly) pair appears at most once —
 a point maps to exactly one cell and a polygon's cover lists each cell
@@ -33,10 +43,10 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.geometry_fns import cell_id_col
-from ..geom.cells import MAX_RES, cover_bbox, pick_res
-from ..geom.packed import from_geojson
-from ..geom.pip import points_in_polygon
+from ..functions.geometry_fns import cell_id_col, ident_sql
+from ..geom.cells import MAX_RES, _grid, compose, cover_bbox, pick_res
+from ..geom.packed import PackedGeometry, collection_children, from_geojson
+from ..geom.pip import geometry_intersects_polygon, points_in_polygon, rects_intersect_polygon
 from ..session import local_df, memo, plan_key
 from .spans import extract_geo_spans
 
@@ -98,21 +108,13 @@ def _parse_float_segments(blobs: list) -> np.ndarray:
         return _parse_floats(joined)
 
 
-def _cell_id_for(x_col: str, y_col: str, res: int):
-    """cell_id Column for named point columns: the single-round-trip
-    F.expr build when the names are plain identifiers, the Column-tree
-    form otherwise (exotic names would need quoting in raw SQL)."""
-    if x_col.isidentifier() and y_col.isidentifier():
-        return cell_id_col(x_col, y_col, res)
-    return cell_id_col(F.col(x_col), F.col(y_col), res)
-
-
 def _collect_polys(polys: DataFrame):
-    """Driver-side: polygon table -> {poly_id: (coords, ring_offsets)} +
-    per-poly bbox list.  The polygon side is the *dimension*; the point
-    side is the 10^12-row fact and never leaves the executors.
-    Session-memoized: one flagship build collects the dim from both the
-    Point and the poly branch, and each collect is a full Spark job."""
+    """Driver-side: polygon table -> ({poly_id: (coords, ring_offsets)},
+    {poly_id: bbox}, plan_key(polys)).  The polygon side is the
+    *dimension*; the point side is the 10^12-row fact and never leaves
+    the executors.  Session-memoized (each collect is a full Spark job);
+    the key is returned so callers memoize what they derive from the
+    dim under it."""
 
     def build():
         packed, bboxes = {}, {}
@@ -123,7 +125,8 @@ def _collect_polys(polys: DataFrame):
             bboxes[int(r["poly_id"])] = (c[:, 0].min(), c[:, 1].min(), c[:, 0].max(), c[:, 1].max())
         return packed, bboxes
 
-    return memo(polys.sparkSession, ("poly_dim", plan_key(polys)), build)
+    key = plan_key(polys)
+    return (*memo(polys.sparkSession, ("poly_dim", key), build), key)
 
 
 def _auto_res(bboxes: dict) -> int:
@@ -167,9 +170,10 @@ def pip_join_points(
     if refine and distributed:
         return pip_join_points_shuffle(points, polys, res=res, x_col=x_col, y_col=y_col)
     spark: SparkSession = points.sparkSession
-    packed, bboxes = _collect_polys(polys)
+    packed, bboxes, key = _collect_polys(polys)
     if res is None:
         res = _auto_res(bboxes)
+    x, y = ident_sql(x_col), ident_sql(y_col)
 
     # r8 RECTANGLE BYPASS (guide §4.1 "prefer built-ins"; the Point-path
     # twin of the poly-span side's RectangleIntersects bypass): for a
@@ -197,19 +201,9 @@ def pip_join_points(
             )
 
         cover_df = memo(spark, ("rect_cover", res, tuple(sorted(bboxes.items()))), _mk_rect_cover)
-        pts = points.withColumn("cell_id", _cell_id_for(x_col, y_col, res))
+        pts = points.withColumn("cell_id", cell_id_col(x, y, res))
         cand = pts.join(F.broadcast(cover_df), "cell_id").drop("cell_id")
-        if x_col.isidentifier() and y_col.isidentifier():
-            keep = (
-                f"{x_col} >= _pminx AND {x_col} < _pmaxx AND "
-                f"{y_col} >= _pminy AND {y_col} < _pmaxy"
-            )
-        else:
-            x, y = F.col(x_col), F.col(y_col)
-            keep = (
-                (x >= F.col("_pminx")) & (x < F.col("_pmaxx"))
-                & (y >= F.col("_pminy")) & (y < F.col("_pmaxy"))
-            )
+        keep = f"{x} >= _pminx AND {x} < _pmaxx AND {y} >= _pminy AND {y} < _pmaxy"
         return cand.where(keep).drop("_pminx", "_pminy", "_pmaxx", "_pmaxy")
 
     def _mk_cover():
@@ -221,12 +215,15 @@ def pip_join_points(
 
     cover_df = memo(spark, ("cell_cover", res, tuple(sorted(bboxes.items()))), _mk_cover)
 
-    pts = points.withColumn("cell_id", _cell_id_for(x_col, y_col, res))
+    pts = points.withColumn("cell_id", cell_id_col(x, y, res))
     cand = pts.join(F.broadcast(cover_df), "cell_id").drop("cell_id")
     if not refine:
         return cand
 
-    bpolys = spark.sparkContext.broadcast(packed)
+    bpolys = memo(
+        spark, ("poly_bc", key), lambda: spark.sparkContext.broadcast(packed),
+        on_evict=lambda bc: bc.unpersist(),
+    )
 
     # Refinement as a BOOLEAN pandas UDF inside a WHERE, not a
     # mapInArrow over whole rows: Spark's ArrowEvalPython projects ONLY
@@ -257,7 +254,7 @@ def pip_join_points(
             keep[s] = points_in_polygon(pxv[s], pyv[s], coords, ro)
         return pd.Series(keep)
 
-    return cand.where(pip_ok(F.col(x_col), F.col(y_col), F.col("poly_id")))
+    return cand.where(pip_ok(F.col(x), F.col(y), F.col("poly_id")))
 
 
 def pip_join_docs(
@@ -321,9 +318,9 @@ def _bbox_rect(cvals: np.ndarray, coffs: np.ndarray, single_ring_polygon: np.nda
     coord buffer (row i owns ``cvals[coffs[i]:coffs[i+1]]``, never
     empty).  A row is a rect iff it is a ``single_ring_polygon`` of 5
     points, closed, whose vertex set IS its 4 bbox corners.  Rect spans
-    x rect dim polygons later BYPASS the Python refinement entirely
+    x rect dim polygons are then decided by the bbox filter alone
     (bbox overlap <=> intersects for closed axis-aligned rectangles —
-    GEOS RectangleIntersects, done at plan level).
+    GEOS RectangleIntersects).
     -> (minx, miny, maxx, maxy, rect)."""
     vstarts = coffs[:-1] // 2
     xs, ys = cvals[0::2], cvals[1::2]
@@ -502,13 +499,11 @@ def _decode_bounds(batches):
             & (np.diff(np.asarray(roffs, dtype=np.int64)) == 2)
         )
         minx, miny, maxx, maxy, rect = _bbox_rect(cvals, coffs_np, single_ring_polygon)
-        # rect spans ship PAYLOAD-FREE (round-4 verdict item 4): a
-        # closed axis-aligned rectangle is fully determined by its
-        # bbox columns, so its coords/offsets are blanked here —
-        # ~95% of spans at bench shapes stop paying the 130-byte
-        # geometry struct through explode, join, and the refine's
-        # Arrow transfer.  The refine reconstructs the test from
-        # (minx, miny, maxx, maxy) via rects_intersect_polygon.
+        # rect spans ship PAYLOAD-FREE: a closed axis-aligned
+        # rectangle is fully determined by its bbox columns, so its
+        # coords/offsets are blanked here.  The refine reconstructs
+        # the test from (minx, miny, maxx, maxy) via
+        # rects_intersect_polygon.
         roffs_np = np.asarray(roffs, np.int64)
         poffs_np = np.asarray(poffs, np.int64)
         rvals_all = np.concatenate(ring_parts)
@@ -579,8 +574,8 @@ def _decode_fast_batch(batch, sel, cvals, clen, rings=None, ring_lens=None):
     ops only: ring offsets come from a grouped cumsum over the flat
     per-ring counts, never per-row Python dicts.  Fast rows ship as
     their OWN batch, separate from the per-row fallback batch:
-    downstream candidate generation (explode -> broadcast cell join ->
-    reporting-cell dedup) is order-insensitive, so splitting the batch
+    the span join looks up and refines each decoded batch on its own
+    and its output is order-insensitive, so splitting the batch
     removes the per-row append/assembly loop for the majority
     (it was ~2.3s of the 5.1s clean-window poly path)."""
     import pyarrow as pa
@@ -656,135 +651,222 @@ def _decode_fast_batch(batch, sel, cvals, clen, rings=None, ring_lens=None):
 ADAPTIVE_LEVEL_WINDOW = 4
 
 
-def _poly_span_candidates(
-    spark: SparkSession, geo: DataFrame, is_point, bboxes: dict, res: int,
-    rect_pids: frozenset = frozenset(),
-) -> DataFrame:
-    """non-Point geo spans -> deduped (doc_id, span_pos, poly_id, geom)
-    candidates: geojson decode -> native bbox cover explode -> broadcast
-    cell join -> bbox overlap filter -> reporting-cell dedup (the pair
-    survives only in the cell holding the bbox-intersection lower-left
-    corner — dedup WITHOUT a shuffle).
+def _expand(counts: np.ndarray):
+    """counts[i] -> (owner, rank): i repeated counts[i] times, and each
+    repeat's rank 0..counts[i]-1 — a ragged loop in flat form."""
+    owner = np.repeat(np.arange(counts.size), counts)
+    return owner, np.arange(owner.size) - (np.cumsum(counts) - counts)[owner]
 
-    ADAPTIVE COVER RESOLUTION (VERDICT r5 item 4): each span explodes at
-    its OWN level — the finest level in [res-ADAPTIVE_LEVEL_WINDOW, res]
-    whose cell is at least the span's bbox extent per axis, so every
-    span emits <= 2x2 cells regardless of its size.  A single global
-    res is chosen from the POLYGON dim (_auto_res) and is quadratically
-    wrong for spans much larger than the median polygon (a 2-degree
-    span at the bench res explodes ~18 cells; at web scale,
-    heterogeneous span sizes make this the explode bottleneck).  The
-    polygon side is the broadcast DIM, so it absorbs the multi-level
-    cost: it publishes its bbox cover at EVERY level in the window and
-    the join key (cell_id embeds the level, geom.cells.compose) matches
-    each span at the span's level.  Dedup/filter semantics are
-    unchanged — the output is exactly the bbox-overlap pair set at any
-    level choice, because the cell holding the bbox-intersection
-    lower-left corner is covered by both sides at the span's level.
 
-    The decode is ONE mapInPandas pass that emits the packed geometry
-    AND its bbox as concrete columns.  The previous scalar-UDF version
-    (geojson_decode_udf + geom_bounds_udf) got duplicated by projection
-    collapse into stacked ArrowEvalPython stages — the JSON parse ran
-    several times per span (measured 14.7s -> ~4s on 2M spans at
-    local[32]).  A mapInPandas node is a black-box projection the
-    optimizer can neither split nor replicate."""
+def _groups(row: np.ndarray, idx: np.ndarray):
+    """Positions ``idx`` grouped by ``row[idx]`` -> (row, positions) pairs."""
+    if idx.size == 0:
+        return []
+    idx = idx[np.argsort(row[idx], kind="stable")]
+    cut = np.flatnonzero(np.diff(row[idx])) + 1
+    return zip(row[idx[np.concatenate(([0], cut))]].tolist(), np.split(idx, cut))
+
+
+def _span_dim(packed: dict, bboxes: dict, res: int) -> dict:
+    """Driver side of the span join: the polygon dim as flat numpy
+    arrays.  Every polygon's closed-bbox cover at EVERY level in
+    [res - ADAPTIVE_LEVEL_WINDOW, res] (cell ids embed their level,
+    geom.cells.compose), sorted by cell id next to the polygon's row;
+    per row the polygon id, bbox, rect flag and packed geometry."""
+    pids = sorted(bboxes)
     lmin = max(0, res - ADAPTIVE_LEVEL_WINDOW)
+    cells, rows = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+    for i, pid in enumerate(pids):
+        for lvl in range(lmin, res + 1):
+            c = cover_bbox(*bboxes[pid], lvl)
+            cells.append(c)
+            rows.append(np.full(c.size, i, np.int64))
+    cell = np.concatenate(cells)
+    order = np.argsort(cell, kind="stable")
+    return {
+        "lmin": lmin, "res": res, "cell": cell[order], "row": np.concatenate(rows)[order],
+        "poly_id": np.asarray(pids, np.int64),
+        "bbox": np.asarray([bboxes[p] for p in pids], np.float64).reshape(-1, 4),
+        "rect": np.asarray([_is_rect_poly(*packed[p]) for p in pids], bool),
+        "geom": [PackedGeometry(3, packed[p][0], packed[p][1], np.zeros(1, np.int32)) for p in pids],
+    }
 
-    def _mk_cover():
-        cover_rows = []
-        for pid, (minx, miny, maxx, maxy) in bboxes.items():
-            seen: set[int] = set()
-            for lvl in range(lmin, res + 1):
-                for cid in cover_bbox(minx, miny, maxx, maxy, lvl).tolist():
-                    if cid not in seen:
-                        seen.add(cid)
-                        cover_rows.append(
-                            (cid, pid, float(minx), float(miny), float(maxx), float(maxy), pid in rect_pids)
-                        )
-        return local_df(
-            spark, cover_rows,
-            "cell_id long, poly_id long, pminx double, pminy double, pmaxx double, pmaxy double, prect boolean",
+
+def _candidates(minx, miny, maxx, maxy, dim: dict):
+    """Span bboxes -> (span index, dim row) of every span x polygon pair
+    whose CLOSED bboxes overlap, each pair exactly once.
+
+    ADAPTIVE LEVEL: each span looks up its cells at its own level — the
+    finest in [res - ADAPTIVE_LEVEL_WINDOW, res] whose cell is at least
+    the span's extent per axis — so any span within the window has
+    <= 2x2 cells, and a zero-extent Point has one cell at ``res``.  A
+    single global res (chosen from the polygon dim, _auto_res) is
+    quadratically wrong for spans much larger than the median polygon;
+    the dim absorbs the window instead, publishing its cover at every
+    level.  Span cells come from geom.cells._grid, the function
+    cover_bbox uses, so span and dim cells agree by construction.
+
+    REPORTING CELL: a pair is kept only in the cell, at the span's
+    level, holding the lower-left corner of the two bboxes'
+    intersection.  Both sides cover that cell, so every overlap pair
+    survives exactly once, with no dedup shuffle — and at ANY level
+    choice, as long as a span's cells and its reporting cell share it."""
+    lmin, res = dim["lmin"], dim["res"]
+    fit = np.minimum(360.0 / np.maximum(maxx - minx, 1e-12), 180.0 / np.maximum(maxy - miny, 1e-12))
+    lvl = np.clip(np.floor(np.log2(fit)), lmin, res).astype(np.int64)
+    ix0, iy0 = _grid(minx, miny, lvl)
+    ix1, iy1 = _grid(maxx, maxy, lvl)
+    ny = iy1 - iy0 + 1
+    span, k = _expand((ix1 - ix0 + 1) * ny)
+    ix, iy = ix0[span] + k // ny[span], iy0[span] + k % ny[span]
+    cell = compose(lvl[span], ix, iy)
+    lo = np.searchsorted(dim["cell"], cell, "left")
+    c, k = _expand(np.searchsorted(dim["cell"], cell, "right") - lo)
+    row, s = dim["row"][lo[c] + k], span[c]
+    b = dim["bbox"][row]
+    rx, ry = _grid(np.maximum(minx[s], b[:, 0]), np.maximum(miny[s], b[:, 1]), lvl[s])
+    ok = (
+        (minx[s] <= b[:, 2]) & (b[:, 0] <= maxx[s]) & (miny[s] <= b[:, 3]) & (b[:, 1] <= maxy[s])
+        & (rx == ix[c]) & (ry == iy[c])
+    )
+    return s[ok], row[ok]
+
+
+def _refine_points(x, y, row, dim: dict) -> np.ndarray:
+    """Even-odd PIP of each candidate (point, dim row).  On a proper
+    rectangle the ray-cast IS the half-open box test (CLAUDE.md), so
+    rect polygons take that test over all their pairs at once."""
+    b = dim["bbox"][row]
+    rect = dim["rect"][row]
+    keep = rect & (b[:, 0] <= x) & (x < b[:, 2]) & (b[:, 1] <= y) & (y < b[:, 3])
+    for r, i in _groups(row, np.flatnonzero(~rect)):
+        g = dim["geom"][r]
+        keep[i] = points_in_polygon(x[i], y[i], g.coords, g.ring_offsets)
+    return keep
+
+
+def _refine_spans(rb, s, row, dim: dict) -> np.ndarray:
+    """GEOS-Intersects of each candidate (decoded span ``s`` of ``rb``,
+    dim row), read from the decode's flat Arrow buffers (list offsets +
+    values), never per-row Python objects except for the rare span that
+    needs the exact edge tests."""
+    rect = rb.column("rect").to_numpy(zero_copy_only=False)[s]
+    prect = dim["rect"][row]
+    keep = rect & prect  # closed rects: bbox overlap <=> Intersects
+    # rect spans travel payload-free (decode): their bbox IS the geometry
+    bounds = [rb.column(n).to_numpy()[s] for n in ("minx", "miny", "maxx", "maxy")]
+    for r, i in _groups(row, np.flatnonzero(rect & ~prect)):
+        g = dim["geom"][r]
+        keep[i] = rects_intersect_polygon(*(v[i] for v in bounds), g.coords, g.ring_offsets)
+    todo = np.flatnonzero(~rect)
+    if todo.size == 0:
+        return keep
+    geom = rb.column("geom")
+    flat = {
+        n: (geom.field(n).offsets.to_numpy(), geom.field(n).values.to_numpy())
+        for n in ("coords", "ring_offsets", "part_offsets", "part_types", "child_offsets")
+    }
+    gtype = geom.field("gtype").to_numpy()
+    off, vals = flat["coords"]
+
+    def packed_at(j):
+        def part(n):
+            o, v = flat[n]
+            return v[o[j] : o[j + 1]]
+
+        gc = gtype[j] == 7
+        return PackedGeometry(
+            int(gtype[j]), part("coords"), part("ring_offsets"), part("part_offsets"),
+            part("part_types") if gc else None, part("child_offsets") if gc else None,
         )
 
-    cover_df = memo(spark, ("poly_cover", res, lmin, tuple(sorted(bboxes.items())), rect_pids), _mk_cover)
+    for r, i in _groups(row, todo):
+        g = dim["geom"][r]
+        lens = off[s[i] + 1] - off[s[i]]  # > 0: the decode drops empty spans
+        owner, k = _expand(lens)
+        v = vals[off[s[i]][owner] + k]
+        inside = points_in_polygon(v[0::2], v[1::2], g.coords, g.ring_offsets)
+        anyin = np.logical_or.reduceat(inside, (np.cumsum(lens) - lens) // 2)
+        keep[i[anyin]] = True
+        # no span vertex inside: only an edge contact or a containing
+        # child polygon can intersect
+        for j in i[~anyin]:
+            keep[j] = any(geometry_intersects_polygon(ch, g) for ch in collection_children(packed_at(s[j])))
+    return keep
 
-    g = geo.where(~is_point).selectExpr("doc_id", "span_pos", "text").mapInArrow(
-        _decode_bounds,
-        schema=(
-            "doc_id string, span_pos int, "
-            "geom struct<gtype:tinyint,coords:array<double>,ring_offsets:array<int>,part_offsets:array<int>,"
-            "part_types:array<tinyint>,child_offsets:array<int>>, "
-            "minx double, miny double, maxx double, maxy double, rect boolean"
-        ),
-    )
 
-    # the whole level-pick -> explode -> cell-id -> bbox-filter ->
-    # reporting-cell chain is emitted as server-side-parsed SQL strings:
-    # the Column tree version cost ~1.9s of py4j round-trips PER BUILD
-    # on the flagship (cold-plan profile, VERDICT r5 item 7) — the plan
-    # is identical, only the driver-side construction path changes
-    def cix(lon):
-        return f"CAST(LEAST(GREATEST(FLOOR(({lon} + 180.0D) / 360.0D * _n), 0), _n - 1) AS BIGINT)"
+def _join_spans(batches, dim: dict, refine: bool):
+    """The span join's one Arrow pass: (doc_id, span_pos, text, px, py)
+    batches -> (doc_id, span_pos, poly_id) batches.  A Point span
+    arrives as px/py with NULL text; any other span arrives as text and
+    decodes through _decode_bounds.  ``refine=False`` emits the
+    candidates of the non-Point spans only."""
+    import pyarrow as pa
 
-    def ciy(lat):
-        return f"CAST(LEAST(GREATEST(FLOOR(({lat} + 90.0D) / 180.0D * _n), 0), _n - 1) AS BIGINT)"
-
-    # finest level in [lmin, res] whose cell covers the span per axis
-    # (<= 2x2 exploded cells for any span size within the window)
-    lvl_sql = (
-        f"GREATEST({lmin}, LEAST({res}, CAST(FLOOR(LOG2(LEAST("
-        "360.0D / GREATEST(maxx - minx, 1e-12D), "
-        "180.0D / GREATEST(maxy - miny, 1e-12D)))) AS INT)))"
-    )
-    cell_of = "CAST(_lvl AS BIGINT) * 288230376151711744 + {ix} * 536870912 + {iy}"
-    cols = ["doc_id", "span_pos", "geom", "minx", "miny", "maxx", "maxy", "rect"]
-    covered = g.selectExpr(
-        *cols,
-        f"{lvl_sql} AS _lvl",
-    ).selectExpr(
-        *cols, "_lvl", "SHIFTLEFT(CAST(1 AS BIGINT), _lvl) AS _n",
-    ).selectExpr(
-        *cols, "_lvl", "_n",
-        f"explode(sequence({cix('minx')}, {cix('maxx')})) AS _ix",
-        f"{ciy('miny')} AS _iy0", f"{ciy('maxy')} AS _iy1",
-    ).selectExpr(
-        *cols, "_lvl", "_n", "_ix", "explode(sequence(_iy0, _iy1)) AS _iy",
-    ).selectExpr(
-        *cols, "_lvl", "_n", cell_of.format(ix="_ix", iy="_iy") + " AS cell_id",
-    )
-    # bbox overlap + reporting cell in ONE filter: the pair survives
-    # only in the cell (at the span's own level) holding the
-    # bbox-intersection lower-left corner (dedup without a shuffle)
-    keep = (
-        "minx <= pmaxx AND pminx <= maxx AND miny <= pmaxy AND pminy <= maxy "
-        "AND cell_id = "
-        + cell_of.format(ix=cix("GREATEST(minx, pminx)"), iy=ciy("GREATEST(miny, pminy)"))
-    )
-    return (
-        covered.join(F.broadcast(cover_df), "cell_id")
-        .where(keep)
-        .selectExpr(
-            "doc_id", "span_pos", "poly_id", "geom", "rect", "prect",
-            "minx", "miny", "maxx", "maxy",
+    def emit(rb, s, row):
+        sel = pa.array(s)
+        return pa.RecordBatch.from_arrays(
+            [rb.column("doc_id").take(sel), rb.column("span_pos").take(sel), pa.array(dim["poly_id"][row])],
+            names=["doc_id", "span_pos", "poly_id"],
         )
+
+    for batch in batches:
+        if refine:
+            # NULL (unparsable Point, non-Point span) and NaN -> no pair
+            x = batch.column("px").to_numpy(zero_copy_only=False)
+            y = batch.column("py").to_numpy(zero_copy_only=False)
+            pt = np.flatnonzero(np.isfinite(x) & np.isfinite(y))
+            x, y = x[pt], y[pt]
+            s, row = _candidates(x, y, x, y, dim)
+            keep = _refine_points(x[s], y[s], row, dim)
+            yield emit(batch, pt[s[keep]], row[keep])
+        for rb in _decode_bounds([batch]):
+            b = [rb.column(n).to_numpy() for n in ("minx", "miny", "maxx", "maxy")]
+            fin = np.flatnonzero(np.isfinite(b).all(axis=0))
+            s, row = _candidates(*(v[fin] for v in b), dim)
+            s = fin[s]
+            if refine:
+                keep = _refine_spans(rb, s, row, dim)
+                s, row = s[keep], row[keep]
+            yield emit(rb, s, row)
+
+
+def _span_join(docs: DataFrame, polys: DataFrame, res: int | None, refine: bool) -> DataFrame:
+    """The one physical plan of pip_join_docs_any and
+    poly_span_candidates: docs scan -> posexplode/filter -> codegen
+    Point x/y -> ONE mapInArrow (_join_spans) reading the span dim from
+    a memoized Broadcast.  One Python node per task: each costs a
+    Python worker (and its per-task start-up) per partition."""
+    from ..functions.geometry_fns import point_xy_sql
+
+    spark = docs.sparkSession
+    packed, bboxes, key = _collect_polys(polys)
+    if res is None:
+        res = _auto_res(bboxes)
+    bdim = memo(
+        spark, ("span_dim", key, res),
+        lambda: spark.sparkContext.broadcast(_span_dim(packed, bboxes, res)),
+        on_evict=lambda bc: bc.unpersist(),
+    )
+    xs, ys, ps = point_xy_sql("text")
+    spans = extract_geo_spans(docs).selectExpr("doc_id", "span_pos", "text", f"{ps} AS _pt").selectExpr(
+        "doc_id", "span_pos", "IF(_pt, NULL, text) AS text",
+        f"IF(_pt, {xs}, NULL) AS px", f"IF(_pt, {ys}, NULL) AS py",
+    )
+    doc_type = spans.schema["doc_id"].dataType.simpleString()
+    return spans.mapInArrow(
+        lambda batches: _join_spans(batches, bdim.value, refine),
+        schema=f"doc_id {doc_type}, span_pos int, poly_id long",
     )
 
 
 def poly_span_candidates(docs: DataFrame, polys: DataFrame, res: int | None = None) -> DataFrame:
-    """Bench/diagnostic surface: the poly-span path's pre-refinement
-    candidates for interleaved docs (mirrors pip_join_points
-    ``refine=False``) — used to normalize per-candidate refine cost."""
-    from ..functions.geometry_fns import point_xy_native
-
-    spark = docs.sparkSession
-    packed, bboxes = _collect_polys(polys)
-    if res is None:
-        res = _auto_res(bboxes)
-    geo = extract_geo_spans(docs)
-    _, _, is_point = point_xy_native("text")
-    rect_pids = frozenset(pid for pid, (c, ro) in packed.items() if _is_rect_poly(c, ro))
-    return _poly_span_candidates(spark, geo, is_point, bboxes, res, rect_pids)
+    """Bench/diagnostic surface: the pre-refine (doc_id, span_pos,
+    poly_id) candidates of the NON-Point geo spans — every closed-bbox
+    overlap pair, once — from pip_join_docs_any's own kernel with the
+    refine off (mirrors pip_join_points ``refine=False``); used to
+    normalize per-candidate refine cost."""
+    return _span_join(docs, polys, res, refine=False)
 
 
 def pip_join_docs_any(docs: DataFrame, polys: DataFrame, res: int | None = None) -> DataFrame:
@@ -792,193 +874,21 @@ def pip_join_docs_any(docs: DataFrame, polys: DataFrame, res: int | None = None)
     for geo spans of ANY geometry type (crop/rasterize in the reference
     accept any geometry, gdal.py:836-846).
 
-    Point spans take the codegen fast path (== pip_join_docs);
-    Polygon/LineString/Multi* spans go through the _decode_bounds
-    mapInArrow -> native bbox cover explode -> broadcast cell join,
-    deduped WITHOUT a shuffle via the reporting-cell trick (a candidate
-    survives only in the cell containing the bbox-intersection
-    lower-left corner), then exact GEOS-Intersects refinement against
-    the broadcast packed dims.
+    One Arrow pass per partition (module docstring): Point spans cross
+    Arrow as two codegen-parsed doubles, every other span as its text.
+    Candidates are the closed-bbox overlap pairs (_candidates), each
+    exactly once; the refine is exact:
 
-    The refine materializes the candidates once (persist) and accepts
-    rect-span x rect-polygon pairs directly in the JVM — the bbox
-    filter already decided them — so at rect-heavy corpus shapes ~90%
-    of candidate rows never cross Arrow.  The rest pass a BOOLEAN
-    pandas UDF inside a WHERE: only its argument columns cross Arrow
-    and one byte returns per row.  (A plain where()-split would
-    recompute the candidate subtree twice — the persist is the
-    documented price of branching, cf. the dev notes.)
-    """
-    from ..functions.geometry_fns import point_xy_native, point_xy_sql
+    * Point spans: even-odd ray-cast, the same pairs as pip_join_docs;
+    * rect span x rect polygon: accepted, the bbox filter decided it
+      (closed rects: bbox overlap <=> GEOS Intersects);
+    * rect span x other polygon: rects_intersect_polygon;
+    * every other span: vertex containment, then the exact polygon /
+      segment tests per collection child.
 
-    spark = docs.sparkSession
-    packed, bboxes = _collect_polys(polys)
-    if res is None:
-        res = _auto_res(bboxes)
-
-    geo = extract_geo_spans(docs)
-    _, _, is_point = point_xy_native("text")
-    xs, ys, ps = point_xy_sql("text")
-
-    # --- Point spans: identical plan to pip_join_docs ---------------
-    pts = geo.where(ps).selectExpr(
-        "doc_id", "span_pos", f"{xs} AS x", f"{ys} AS y"
-    ).where("x IS NOT NULL AND y IS NOT NULL")
-    pt_pairs = pip_join_points(pts, polys, res=res).selectExpr("doc_id", "span_pos", "poly_id")
-
-    # --- non-Point spans: decode -> cover -> intersects --------------
-    rect_pids = frozenset(pid for pid, (c, ro) in packed.items() if _is_rect_poly(c, ro))
-    cand = _poly_span_candidates(spark, geo, is_point, bboxes, res, rect_pids)
-    # RectangleIntersects bypass: a rect SPAN against a rect DIM polygon
-    # is decided by the bbox-overlap filter the candidates already
-    # passed (closed rects: bbox overlap <=> GEOS Intersects).  Those
-    # pairs' geometry is replaced by an EMPTY sentinel struct
-    # (gtype=-1): the plan stays ONE pass (a where()-split would
-    # recompute the candidate subtree twice), their coordinates
-    # contribute zero bytes to the refine's Arrow transfer, and the
-    # refine accepts sentinel rows directly.  (A NULL struct would be
-    # semantically cleaner but Spark's Arrow writer serializes null
-    # structs pathologically slowly — measured 65s vs 1.8s on 4.66M
-    # rows.)
-    # (SQL-string form of when(~both_rect, geom).otherwise(empty) —
-    # identical three-valued logic, one server-side parse instead of a
-    # ~70-round-trip py4j Column tree on the cold-plan profile)
-    empty_geom_sql = (
-        "named_struct("
-        "'gtype', CAST(-1 AS TINYINT), "
-        "'coords', CAST(array() AS array<double>), "
-        "'ring_offsets', CAST(array() AS array<int>), "
-        "'part_offsets', CAST(array() AS array<int>), "
-        "'part_types', CAST(array() AS array<tinyint>), "
-        "'child_offsets', CAST(array() AS array<int>))"
-    )
-    cand = cand.selectExpr(
-        "doc_id", "span_pos", "poly_id",
-        # rect spans travel payload-free (geometry blanked at decode);
-        # the refine rebuilds their test from the four bbox doubles
-        f"CASE WHEN NOT (rect AND prect) THEN geom ELSE {empty_geom_sql} END AS geom",
-        "rect", "prect", "minx", "miny", "maxx", "maxy",
-    )
-
-    bpolys = spark.sparkContext.broadcast(packed)
-
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("boolean")
-    def poly_ok(pid_s, rect_s, minx_s, miny_s, maxx_s, maxy_s, geom_df):
-        import pandas as pd
-
-        from ..geom.packed import PackedGeometry, collection_children
-        from ..geom.pip import (
-            _any_segment_intersection,
-            _open_edges,
-            _ring_edges,
-            points_in_polygon,
-            polygons_intersect,
-            rects_intersect_polygon,
-        )
-
-        polys_local = bpolys.value
-        gtypes = geom_df["gtype"].to_numpy(np.int8)
-        keep = gtypes == -1  # RectangleIntersects bypass sentinel
-        pidv = pid_s.to_numpy(np.int64)
-        rectv = rect_s.to_numpy(bool)
-        mnx = minx_s.to_numpy(np.float64)
-        mny = miny_s.to_numpy(np.float64)
-        mxx = maxx_s.to_numpy(np.float64)
-        mxy = maxy_s.to_numpy(np.float64)
-        coords_o = geom_df["coords"].to_numpy(object)
-        ring_o = geom_df["ring_offsets"].to_numpy(object)
-        part_o = geom_df["part_offsets"].to_numpy(object)
-        ptype_o = geom_df["part_types"].to_numpy(object)
-        choff_o = geom_df["child_offsets"].to_numpy(object)
-
-        order = np.argsort(pidv, kind="stable")
-        uniq = np.unique(pidv)
-        bnds = np.searchsorted(pidv[order], uniq)
-        for s, p in zip(np.split(order, bnds[1:]), uniq):
-            s0 = s[gtypes[s] != -1]
-            if len(s0) == 0:
-                continue
-            pcoords, pro = polys_local[int(p)]
-            lens = np.fromiter((len(coords_o[i]) for i in s0), np.int64, len(s0))
-            srect = s0[rectv[s0] & (lens == 0)]
-            if len(srect):
-                hit = rects_intersect_polygon(
-                    mnx[srect], mny[srect], mxx[srect], mxy[srect], pcoords, pro
-                )
-                keep[srect[hit]] = True
-            sreal = s0[lens > 0]
-            if len(sreal) == 0:
-                continue
-            verts = np.concatenate([np.asarray(coords_o[i], np.float64) for i in sreal]).reshape(-1, 2)
-            inside = points_in_polygon(verts[:, 0], verts[:, 1], pcoords, pro)
-            vstarts = np.zeros(len(sreal), dtype=np.int64)
-            np.cumsum((lens[lens > 0] // 2)[:-1], out=vstarts[1:])
-            anyin = np.logical_or.reduceat(inside, vstarts)
-            keep[sreal[anyin]] = True
-            poly = PackedGeometry(
-                gtype=3, coords=pcoords, ring_offsets=pro, part_offsets=np.asarray([0], np.int32)
-            )
-            poly_edges = None
-            for i in sreal[~anyin]:
-                gt = int(gtypes[i])
-                if gt in (1, 4):
-                    continue
-                pg = PackedGeometry(
-                    gtype=gt,
-                    coords=np.asarray(coords_o[i], np.float64),
-                    ring_offsets=np.asarray(ring_o[i], np.int32),
-                    part_offsets=np.asarray(part_o[i], np.int32),
-                )
-                if gt == 7:
-                    pg.part_types = np.asarray(ptype_o[i], np.int8)
-                    pg.child_offsets = np.asarray(choff_o[i], np.int32)
-                    for ch in collection_children(pg):
-                        cgt = int(ch.gtype)
-                        if cgt in (1, 4) or ch.coords.size == 0:
-                            continue
-                        if cgt in (3, 6):
-                            if polygons_intersect(ch, poly):
-                                keep[i] = True
-                                break
-                        else:
-                            if poly_edges is None:
-                                poly_edges = _ring_edges(pcoords, pro)
-                            if _any_segment_intersection(
-                                _open_edges(ch.coords, ch.ring_offsets), poly_edges
-                            ):
-                                keep[i] = True
-                                break
-                elif gt in (3, 6):
-                    keep[i] = polygons_intersect(pg, poly)
-                else:
-                    if poly_edges is None:
-                        poly_edges = _ring_edges(pcoords, pro)
-                    keep[i] = _any_segment_intersection(
-                        _open_edges(pg.coords, pg.ring_offsets), poly_edges
-                    )
-        return pd.Series(keep)
-
-    # materialize once, branch: rect-x-rect pairs are already decided
-    # by the bbox filter the candidates passed — accept them JVM-side;
-    # only the remainder crosses Arrow.  persist (NOT localCheckpoint):
-    # lineage survives, so an executor loss on a 1000-node cluster
-    # recomputes the lost partitions instead of failing the job;
-    # spill-to-disk bounds memory; the ContextCleaner unpersists when
-    # the plan is released.
-    from pyspark.storagelevel import StorageLevel
-
-    c = cand.persist(StorageLevel.MEMORY_AND_DISK)
-    fast = c.where("rect AND prect").selectExpr("doc_id", "span_pos", "poly_id")
-    slow = c.where("NOT (rect AND prect)").where(
-        poly_ok(
-            F.col("poly_id"), F.col("rect"),
-            F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"),
-            F.col("geom"),
-        )
-    ).selectExpr("doc_id", "span_pos", "poly_id")
-    return pt_pairs.unionByName(fast).unionByName(slow)
+    NULL text, unparsable Point coordinates and malformed GeoJSON yield
+    no pair."""
+    return _span_join(docs, polys, res, refine=True)
 
 
 def pip_join_points_shuffle(
@@ -1017,7 +927,7 @@ def pip_join_points_shuffle(
         res = int(np.clip(np.floor(np.log2(360.0 / max(med, 1e-9))), 0, 24))
     cells = gp.select("poly_id", "geom", F.explode(cells_cover_udf(res)(F.col("geom"))).alias("cell_id"))
 
-    pts = points.withColumn("cell_id", _cell_id_for(x_col, y_col, res))
+    pts = points.withColumn("cell_id", cell_id_col(ident_sql(x_col), ident_sql(y_col), res))
     cand = salted_join(pts, cells, "cell_id", salt=salt, hot_threshold=hot_threshold).drop("cell_id")
 
     out_cols = [c for c in cand.columns if c not in ("geom",)]

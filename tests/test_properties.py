@@ -494,7 +494,7 @@ def test_wkb_gpkg_shp_codec_property(poly, pts, shape_kind):
 )
 @example(minx=-180.0, miny=-90.0, w=360.0 / (1 << 9), h=180.0 / (1 << 9), res=9)
 def test_adaptive_level_cover_bound_property(minx, miny, w, h, res):
-    """The adaptive span level (spatial_join._poly_span_candidates):
+    """The adaptive span level (spatial_join._candidates):
     lvl = clamp(floor(log2(min(360/w, 180/h))), res-WINDOW, res) must
     (a) stay in range, and (b) whenever the WINDOW floor did not clamp,
     bound the bbox cover at that level to <= 2x2 cells — including

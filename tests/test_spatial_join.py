@@ -888,7 +888,9 @@ def test_cover_broadcasts_are_local_table_scans(spark):
     """Cell covers are LocalRelations: broadcasting one is a driver-side
     LocalTableScan, so no job runs Python workers to rebuild it.  The
     polygon dims here are deliberately RDD-backed (createDataFrame of a
-    list): they are collected at build time and never enter the plan."""
+    list): they are collected at build time and never enter the plan.
+    pip_join_docs_any is one scan and one Python node, with no cover
+    relation at all."""
     import json as _json
 
     from gdal_boots_spark.operators.spatial_join import pip_join_docs_any
@@ -903,7 +905,160 @@ def test_cover_broadcasts_are_local_table_scans(spark):
     assert _assert_local_covers(pip_join_points(pts, mixed)) == 1
     docs = interleaved_docs(spark, SF_SMOKE, poly_spans=True)
     any_join = pip_join_docs_any(docs, mixed)
-    # the Point cover, plus the poly-span cover once in each branch of
-    # the split refine's persisted candidates
-    assert _assert_local_covers(any_join) == 3
+    # the span join is one Arrow pass over one scan: its cover rides a
+    # Broadcast variable, so there is no cover relation in the plan
+    plan = any_join._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
+    for node in ("ArrowEvalPython", "InMemoryTableScan", "Union", "BroadcastExchange"):
+        assert node not in plan, plan
     assert any_join.count() > 0
+
+
+def _rect_ring(x0, y0, x1, y1):
+    return {"type": "Polygon", "coordinates": [[[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]]}
+
+
+@pytest.mark.parametrize("res", [0, 3, 9, 14])
+def test_span_candidates_match_bruteforce(res):
+    """The span join's numpy candidate lookup (multi-level cover +
+    searchsorted + reporting cell) returns exactly the closed-bbox
+    overlap pairs, each once: zero-extent points, spans clamped at the
+    level window's floor, spans and polygons on cell edges (a lattice
+    of cell-boundary coordinates), and spans at +-180 / +-90."""
+    from gdal_boots_spark.geom.packed import from_geojson
+    from gdal_boots_spark.operators.spatial_join import _candidates, _span_dim
+
+    rng = np.random.default_rng(res)
+    gx, gy = 360.0 / (1 << (res + 1)), 180.0 / (1 << (res + 1))
+
+    cell_w = 360.0 / (1 << res)
+
+    def boxes(n, scale, lattice, spread=10 * cell_w):
+        w = rng.uniform(0.0, scale, n) * rng.integers(0, 2, n)  # half zero-extent
+        h = rng.uniform(0.0, scale / 2, n) * (w > 0)
+        x0 = rng.uniform(-spread, spread, n)
+        y0 = rng.uniform(-spread / 2, spread / 2, n)
+        if lattice:  # every coordinate on a cell boundary at res + 1
+            x0, y0 = np.round(x0 / gx) * gx, np.round(y0 / gy) * gy
+            w, h = np.round(w / gx) * gx, np.round(h / gy) * gy
+        return np.clip(x0, -180, 180), np.clip(y0, -90, 90), np.clip(x0 + w, -180, 180), np.clip(y0 + h, -90, 90)
+
+    parts = [boxes(150, cell_w * 3, False), boxes(150, cell_w * 3, True), boxes(20, min(300.0, 40 * cell_w), False, min(180.0, 20 * cell_w))]
+    corners = ([-180.0, 180.0, -180.0, 170.0], [-90.0, 90.0, 80.0, -90.0], [-180.0, 180.0, 180.0, 180.0], [-90.0, 90.0, 90.0, 90.0])
+    smin_x, smin_y, smax_x, smax_y = (np.concatenate([p[k] for p in parts] + [corners[k]]) for k in range(4))
+
+    bboxes, packed = {}, {}
+    for pid, b in enumerate(zip(*boxes(60, cell_w * 6, True))):
+        if b[0] == b[2] or b[1] == b[3]:
+            continue
+        pg = from_geojson(_rect_ring(*b))
+        packed[pid] = (pg.coords, pg.ring_offsets)
+        bboxes[pid] = b
+    bboxes[999] = (170.0, 80.0, 180.0, 90.0)  # the +180/+90 corner
+    packed[999] = (from_geojson(_rect_ring(170.0, 80.0, 180.0, 90.0)).coords, np.asarray([0, 5]))
+    dim = _span_dim(packed, bboxes, res)
+
+    s, row = _candidates(smin_x, smin_y, smax_x, smax_y, dim)
+    got = list(zip(s.tolist(), dim["poly_id"][row].tolist()))
+    assert len(got) == len(set(got)), "duplicate candidate pairs"
+    exp = {
+        (i, pid)
+        for pid, (x0, y0, x1, y1) in bboxes.items()
+        for i in np.flatnonzero((smin_x <= x1) & (x0 <= smax_x) & (smin_y <= y1) & (y0 <= smax_y)).tolist()
+    }
+    assert set(got) == exp and len(exp) > 50
+    n = smin_x.size  # the +180/+90 point and the two spans on the edges of the globe
+    assert {i for i, p in exp if p == 999} >= {n - 3, n - 2, n - 1}
+
+
+@pytest.mark.parametrize("with_triangle", [False, True])
+def test_docs_any_points_equal_pip_join_docs_on_edges(spark, with_triangle):
+    """Point spans ON the edges and vertices of a rect and a triangle:
+    pip_join_docs_any gives exactly pip_join_docs's pairs, both through
+    the all-rect half-open bypass and through the ray-cast refine."""
+    import json as _json
+
+    from gdal_boots_spark.operators.spatial_join import pip_join_docs, pip_join_docs_any
+
+    tri = [[2.0, 0.0], [3.0, 0.0], [2.5, 1.0], [2.0, 0.0]]
+    polys_rows = [(1, _json.dumps(_rect_ring(0.0, 0.0, 1.0, 1.0)))]
+    if with_triangle:
+        polys_rows.append((2, _json.dumps({"type": "Polygon", "coordinates": [tri]})))
+    polys = spark.createDataFrame(polys_rows, "poly_id long, geojson string")
+    pts = [
+        # rect: corners, edge midpoints, off-centre edge points, inside, outside
+        (0.0, 0.0), (1.0, 0.0), (1.0, 1.0), (0.0, 1.0), (0.5, 0.0), (0.5, 1.0), (0.0, 0.5), (1.0, 0.5),
+        (0.25, 0.0), (1.0, 0.75), (0.5, 0.5), (1.5, 0.5),
+        # triangle: vertices, points on each edge, inside, outside
+        (2.0, 0.0), (3.0, 0.0), (2.5, 1.0), (2.5, 0.0), (2.25, 0.5), (2.75, 0.5), (2.125, 0.25),
+        (2.5, 0.25), (2.0, 0.5),
+    ]
+    docs = _geo_docs(spark, {
+        f"d{i}": [("geo", _json.dumps({"type": "Point", "coordinates": [x, y]}, separators=(",", ":")))]
+        for i, (x, y) in enumerate(pts)
+    })
+    ref = {(r["doc_id"], r["span_pos"], r["poly_id"]) for r in pip_join_docs(docs, polys).collect()}
+    got = {(r["doc_id"], r["span_pos"], r["poly_id"]) for r in pip_join_docs_any(docs, polys).collect()}
+    assert got == ref
+    assert ("d0", 0, 1) in got and ("d2", 0, 1) not in got  # half-open rect boundary
+    assert len(got) >= (8 if with_triangle else 5)
+
+
+def test_pip_join_points_broadcast_is_memoized(spark, tmp_path, monkeypatch):
+    """The ray-cast refine's packed-coordinate Broadcast is built once
+    per polygon table: two builds share it, a rewritten table gets a
+    new one, and an all-rect dim (codegen refine) makes none."""
+    import json as _json
+
+    path = str(tmp_path / "polys")
+
+    def write(pid, lo):
+        tri = [[lo, lo], [lo + 1.0, lo], [lo + 0.5, lo + 1.0], [lo, lo]]
+        spark.createDataFrame(
+            [(pid, _json.dumps({"type": "Polygon", "coordinates": [tri]}))], "poly_id long, geojson string"
+        ).write.mode("overwrite").parquet(path)
+
+    sc = spark.sparkContext
+    made, real = [], sc.broadcast
+
+    def spy(value):
+        made.append(real(value))
+        return made[-1]
+
+    monkeypatch.setattr(sc, "broadcast", spy)
+    pts = spark.createDataFrame([(1, 0.5, 0.25), (2, 5.5, 5.25)], "point_id long, x double, y double")
+
+    def pairs():
+        return {(r["point_id"], r["poly_id"]) for r in pip_join_points(pts, spark.read.parquet(path)).collect()}
+
+    write(7, 0.0)
+    assert pairs() == {(1, 7)} and pairs() == {(1, 7)}
+    assert len(made) == 1
+    write(8, 5.0)
+    assert pairs() == {(2, 8)}
+    assert len(made) == 2
+    pip_join_points(pts, rect_polygons_df(spark)).collect()
+    assert len(made) == 2
+
+
+def test_pip_join_points_reserved_word_columns(spark):
+    """Point columns named after SQL keywords (``order``, ``select``)
+    work on every pip_join_points path: the all-rect codegen filter,
+    the ray-cast refine and the distributed shuffle join."""
+    import json as _json
+
+    rng = np.random.default_rng(5)
+    rows = [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(rng.uniform(25.5, 29.5, 300), rng.uniform(52.5, 55.5, 300)))]
+    plain = spark.createDataFrame(rows, "point_id long, x double, y double")
+    odd = plain.selectExpr("point_id", "x AS `order`", "y AS `select`")
+    rects = rect_polygons_df(spark).select("poly_id", "geojson")
+    tri = _json.dumps({"type": "Polygon", "coordinates": [[[26.5, 53.5], [28.5, 53.6], [27.2, 54.8], [26.5, 53.5]]]})
+    mixed = rects.unionByName(spark.createDataFrame([(900, tri)], "poly_id long, geojson string"))
+    for polys, distributed in ((rects, False), (mixed, False), (mixed, True)):
+        exp = {(r["point_id"], r["poly_id"]) for r in pip_join_points(plain, polys, distributed=distributed).collect()}
+        got = {
+            (r["point_id"], r["poly_id"])
+            for r in pip_join_points(odd, polys, x_col="order", y_col="select", distributed=distributed).collect()
+        }
+        assert got == exp and len(exp) > 0
